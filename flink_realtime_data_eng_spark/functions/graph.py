@@ -59,9 +59,11 @@ def _distribute(df: DataFrame, width: int, *keys: str) -> DataFrame:
     coalesces to a SinglePartition frame: SinglePartition satisfies every
     required distribution, so the loop's joins and aggregates plan with
     ZERO exchanges and each round is one narrow single-task stage. Wider
-    frames get an explicit hash repartition on the loop key, which the
-    in-loop equi-joins and aggregates then reuse exchange-free; AQE stays
-    ON (skew-split still applies inside each round)."""
+    frames get an explicit hash repartition on the loop key, which only
+    the in-loop equi-joins on that same key reuse exchange-free; an
+    aggregate keyed on another column (groupBy on the join's far side)
+    shuffles at the session's batch fan-out, which AQE coalesces. AQE
+    stays ON (skew-split still applies inside each round)."""
     if width == 1:
         return df.coalesce(1)
     return df.repartition(width, *[F.col(k) for k in keys])

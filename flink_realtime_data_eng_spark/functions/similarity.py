@@ -46,9 +46,10 @@ def cosine(a: str | Column, b: str | Column) -> Column:
 
     Null contract (pinned by test, matches the historical expression): a
     NULL vector side scores 0.0 (its norm — and so the denominator — was
-    null, and ``when(den > 0, ·)`` fell through to the 0.0 branch);
-    length-mismatched non-null vectors score NULL (``zip_with`` padded
-    with null, nulling the dot while the denominator stayed positive).
+    null, and ``when(den > 0, ·)`` fell through to the 0.0 branch); an
+    EMPTY side scores 0.0 too (its norm is 0); length-mismatched non-empty
+    vectors score NULL (``zip_with`` padded with null, nulling the dot
+    while the denominator stayed positive).
 
     The returned Column is marked ``asNondeterministic()`` — deliberate,
     see the note at the call site: it pins ONE Arrow evaluation where the
@@ -95,10 +96,12 @@ def cosine(a: str | Column, b: str | Column) -> Column:
         lb = np.array([-1 if v is None else len(v) for v in vb])
         # Old expression semantics, exactly: a NULL side nulls its norm and
         # so the denominator, and when(den > 0, ·).otherwise(0.0) lands in
-        # the 0.0 branch → a null side scores 0.0 (out is pre-zeroed);
-        # unequal-length non-null vectors null only the DOT (zip_with pads
-        # with null) while den stays positive → NULL result.
-        nulls = (la >= 0) & (lb >= 0) & (la != lb)
+        # the 0.0 branch → a null side scores 0.0 (out is pre-zeroed); so
+        # does an EMPTY side (its norm folds to 0, so den == 0) whatever
+        # the other side's length; unequal-length non-empty vectors null
+        # only the DOT (zip_with pads with null) while den stays positive
+        # → NULL result.
+        nulls = (la > 0) & (lb > 0) & (la != lb)
         eps = np.finfo(np.float64).eps
         for d in np.unique(la[(la == lb) & (la >= 0)]):
             idx = np.nonzero((la == d) & (lb == d))[0]

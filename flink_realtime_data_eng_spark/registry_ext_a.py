@@ -2472,8 +2472,9 @@ def x_joint_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     each leaves the cluster idle while the driver plans the next round);
     building them on two threads overlaps one pipeline's driver gaps with
     the other's executor work. Safe since the fixpoints carry their
-    shuffle width as a plan property (graph._distribute) — no session
-    conf is mutated on either path."""
+    shuffle width as a plan property (graph._distribute): the only
+    session confs set on either path are idempotent constants (the
+    time zone and nanosAsLong, set by ``registry_core._prep``)."""
     from concurrent.futures import ThreadPoolExecutor
 
     def _text_keep() -> DataFrame:

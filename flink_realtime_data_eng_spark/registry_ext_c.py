@@ -1141,8 +1141,6 @@ def x_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # offset and the state store, like a nightly job catching up.
     ckpt = _tempfile.mkdtemp(prefix="frde_ckpt_")
     out_dir = _tempfile.mkdtemp(prefix="frde_dsrc_")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
 
     def _sink(batch_df, batch_id):
         # Unconditional write: an empty micro-batch appends nothing, and
@@ -1150,25 +1148,22 @@ def x_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         # per batch (r6 ADVICE).
         batch_df.write.mode("append").parquet(out_dir)
 
-    try:
-        seen = -1
-        for _ in range(12):
-            q = (agg.writeStream.outputMode("update")
-                 .foreachBatch(_sink)
-                 .option("checkpointLocation", ckpt)
-                 .trigger(availableNow=True).start())
-            if not q.awaitTermination(300):
-                q.stop()
-                raise TimeoutError("datasource stream batch hung")
-            try:
-                got = spark.read.parquet(out_dir).count()
-            except Exception:
-                got = 0
-            if got == seen:
-                break  # a run that emitted nothing: offsets at n
-            seen = got
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    seen = -1
+    for _ in range(12):
+        q = (agg.writeStream.outputMode("update")
+             .foreachBatch(_sink)
+             .option("checkpointLocation", ckpt)
+             .trigger(availableNow=True).start())
+        if not q.awaitTermination(300):
+            q.stop()
+            raise TimeoutError("datasource stream batch hung")
+        try:
+            got = spark.read.parquet(out_dir).count()
+        except Exception:
+            got = 0
+        if got == seen:
+            break  # a run that emitted nothing: offsets at n
+        seen = got
     drained = spark.read.parquet(out_dir)
     return (drained.groupBy("user", "operation")
             .agg(F.max("n_events").cast("bigint").alias("n_events"),
@@ -1608,17 +1603,12 @@ def x_statestore_read(spark: SparkSession, sf_dir: str) -> DataFrame:
              .agg(F.count(F.lit(1)).cast("bigint").alias("total")))
     name = "frde_" + _uuid.uuid4().hex[:12]
     ckpt = _tempfile.mkdtemp(prefix="frde_ckpt_")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        writer = (memory_sink(agg, name, "update")
-                  .option("checkpointLocation", ckpt))
-        q = run_available_now(writer)
-        if not q.awaitTermination(600):
-            q.stop()
-            raise TimeoutError(f"state fixture stream {name} timed out")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    writer = (memory_sink(agg, name, "update")
+              .option("checkpointLocation", ckpt))
+    q = run_available_now(writer)
+    if not q.awaitTermination(600):
+        q.stop()
+        raise TimeoutError(f"state fixture stream {name} timed out")
     st = spark.read.format("statestore").option("path", ckpt).load()
     return st.select(F.col("key.user_id").alias("user_id"),
                      F.col("value.count").cast("bigint").alias("total"))

@@ -263,7 +263,6 @@ def st2_action_durations(spark: SparkSession, sf_dir: str) -> DataFrame:
 # batch stand-in.
 # ---------------------------------------------------------------------------
 
-import os as _os
 import tempfile as _tempfile
 import uuid as _uuid
 
@@ -323,26 +322,19 @@ def _run_to_memory(df: DataFrame, spark: SparkSession,
                    output_mode: str = "append") -> DataFrame:
     """Drive a streaming DataFrame to completion into a memory table.
 
-    Shuffle partitions are clamped for the run: streaming state stores cost
-    per-partition fixed overhead (open/commit per micro-batch), so state
-    partitioning should track data volume — 8 is right for the fixture
-    scale; a cluster deployment sizes it via submit conf instead.
-    """
+    Its stateful operators get the session's state partition count — one
+    per core (``session.get_spark``) — so per-partition state-store
+    open/commit overhead scales with the cores, not a fixed fan-out."""
     from .sinks import memory_sink, run_available_now
     name = "frde_" + _uuid.uuid4().hex[:12]
     ckpt = _tempfile.mkdtemp(prefix="frde_ckpt_")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        writer = memory_sink(df, name, output_mode).option("checkpointLocation", ckpt)
-        q = run_available_now(writer)
-        if not q.awaitTermination(600):
-            q.stop()
-            raise TimeoutError(
-                f"streaming round-trip {name} did not finish in 600 s — "
-                "result would be partial, refusing to return it")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    writer = memory_sink(df, name, output_mode).option("checkpointLocation", ckpt)
+    q = run_available_now(writer)
+    if not q.awaitTermination(600):
+        q.stop()
+        raise TimeoutError(
+            f"streaming round-trip {name} did not finish in 600 s — "
+            "result would be partial, refusing to return it")
     return spark.table(name)
 
 
@@ -353,26 +345,20 @@ def _run_to_parquet(df: DataFrame, spark: SparkSession) -> DataFrame:
     (dynamic sessionization emits ~one row per event): the memory sink
     funnels every row through a single driver collection, which at 100x
     SF dominated the replay wall and is a shape no production stream has
-    (K1 file sink is the production contract). Same availableNow drain,
-    same shuffle-clamp policy, append mode only (the parquet sink's own
+    (K1 file sink is the production contract). Same availableNow drain and
+    core-sized state partitions, append mode only (the parquet sink's own
     constraint)."""
     from .sinks import run_available_now
     out = _tempfile.mkdtemp(prefix="frde_sout_")
     ckpt = _tempfile.mkdtemp(prefix="frde_ckpt_")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions",
-                   _os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "8"))
-    try:
-        writer = (df.writeStream.format("parquet").option("path", out)
-                  .option("checkpointLocation", ckpt).outputMode("append"))
-        q = run_available_now(writer)
-        if not q.awaitTermination(600):
-            q.stop()
-            raise TimeoutError(
-                f"streaming round-trip {out} did not finish in 600 s — "
-                "result would be partial, refusing to return it")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    writer = (df.writeStream.format("parquet").option("path", out)
+              .option("checkpointLocation", ckpt).outputMode("append"))
+    q = run_available_now(writer)
+    if not q.awaitTermination(600):
+        q.stop()
+        raise TimeoutError(
+            f"streaming round-trip {out} did not finish in 600 s — "
+            "result would be partial, refusing to return it")
     return spark.read.parquet(out)
 
 

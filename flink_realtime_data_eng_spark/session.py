@@ -15,6 +15,22 @@ Two profiles:
   /root/reference/.../chapter2/BasicStreamingOperations.java:41 — we only pin
   partition counts, never ordering semantics).
 
+Shuffle width is two numbers, because streams and batch plans read
+different confs:
+
+- **Streaming state partitions = the session's cores**
+  (``spark.sql.shuffle.partitions`` = ``defaultParallelism``). Structured
+  Streaming runs with AQE off, so this is the exact number of state stores
+  each stateful operator opens, updates and commits per micro-batch — one
+  per core, like Flink's keyed state sharded over operator parallelism. A
+  checkpoint pins the count it started with: a restarted query keeps it
+  (Spark restores it from the offset log), only new queries pick up the
+  session's value.
+- **Batch fan-out = max(2 × cores, 32)**
+  (``spark.sql.adaptive.coalescePartitions.initialPartitionNum``). With AQE
+  and coalescing on, every batch exchange plans this many partitions and
+  AQE coalesces down at runtime.
+
 Local mode honors ``SPARK_GRAFT_CPUS`` (driver contract) for ``local[N]``.
 """
 
@@ -68,9 +84,16 @@ def get_spark(app_name: str = "flink-realtime-data-eng-spark",
     """Scale-profile session.
 
     On a real cluster the ``master`` comes from spark-submit; locally we run
-    ``local[N]`` with N = SPARK_GRAFT_CPUS (default: all cores). Shuffle
-    partitions default to ~2× local cores (AQE coalesces down), which is the
-    right shape for local[32]; a cluster deployment overrides via submit conf.
+    ``local[N]`` with N = SPARK_GRAFT_CPUS (default: all cores).
+
+    ``shuffle_partitions`` (default ``max(2N, 32)``, 32 under ``local[*]``)
+    is the batch fan-out: AQE plans every batch exchange at that width and
+    coalesces down. Streaming state partitions are the session's cores
+    (``defaultParallelism``): a stream runs with AQE off, so nothing would
+    coalesce a 32-way state layout and each micro-batch would open and
+    commit all 32 state stores per stateful operator. A checkpoint pins
+    the state partition count it was started with. An explicit
+    ``spark.sql.shuffle.partitions`` in ``extra_conf`` wins.
     """
     n = _cpus()
     master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{n}]" if n else "local[*]")
@@ -79,16 +102,23 @@ def get_spark(app_name: str = "flink-realtime-data-eng-spark",
         builder = builder.config(k, v)
     if shuffle_partitions is None:
         shuffle_partitions = max(2 * n, 32) if n else 32
-    builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    for k, v in (extra_conf or {}).items():
+    builder = builder.config(
+        "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
+        str(shuffle_partitions))
+    extra_conf = extra_conf or {}
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
+    if "spark.sql.shuffle.partitions" not in extra_conf:
+        spark.conf.set("spark.sql.shuffle.partitions",
+                       str(spark.sparkContext.defaultParallelism))
     spark.sparkContext.setLogLevel("WARN")
     return spark
 
 
 def get_test_spark(app_name: str = "frde-spark-tests") -> SparkSession:
-    """Deterministic small-data profile for pytest (few partitions, AQE on)."""
+    """Deterministic small-data profile for pytest: 4 batch shuffle
+    partitions and 4 cores' worth of default parallelism, hence 4 streaming
+    state partitions, whatever the host (AQE on)."""
     return get_spark(app_name, shuffle_partitions=4,
-                     extra_conf={"spark.sql.shuffle.partitions": "4",
-                                 "spark.default.parallelism": "4"})
+                     extra_conf={"spark.default.parallelism": "4"})

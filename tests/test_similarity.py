@@ -551,16 +551,19 @@ def test_cosine_null_contract(spark):
     # vector side scores 0.0 (its norm nulled the denominator and
     # when(den > 0, ·) fell through to the 0.0 branch); length-mismatched
     # non-null vectors score NULL (zip_with padded the dot with null while
-    # the denominator stayed positive).
+    # the denominator stayed positive); an empty side has norm 0, so it
+    # scores 0.0 even against a longer vector.
     df = spark.createDataFrame(
         [(1, None, [1.0, 0.0]), (2, [1.0, 0.0], None), (3, None, None),
-         (4, [1.0, 0.0, 0.0], [1.0, 0.0]), (5, [0.0, 0.0], [1.0, 1.0])],
+         (4, [1.0, 0.0, 0.0], [1.0, 0.0]), (5, [0.0, 0.0], [1.0, 1.0]),
+         (6, [], [1.0]), (7, [1.0], []), (8, [], [1.0, 0.0])],
         "i long, a array<float>, b array<float>")
     got = {r["i"]: r["c"] for r in
            df.select("i", similarity.cosine("a", "b").alias("c")).collect()}
     assert got[1] == 0.0 and got[2] == 0.0 and got[3] == 0.0  # null side
     assert got[4] is None                   # unequal lengths
     assert got[5] == 0.0                    # zero-norm side
+    assert got[6] == 0.0 and got[7] == 0.0 and got[8] == 0.0  # empty side
 
 
 def test_lsh_signature_wide_vectors_match_narrow_prefix_planes(spark):
